@@ -10,31 +10,39 @@ Re-expresses ``/root/reference/recommender.py`` (RDD-era
   ``predictAll`` silently dropping factorless pairs (ML2,
   ``recommender.py:64,151,155-156``);
 - union-retrain fold-in for a new user (ML4, ``recommender.py:122-125``);
-- candidate generation as a left-anti join over the new user's rated
-  items (F1 generalized, ``recommender.py:144-146``);
+- candidate generation as ``NOT EXISTS`` over the user's rated items
+  (F1 generalized, ``recommender.py:144-146``);
 - min-max rescale of predictions to [1,5] in pure SQL (ML5,
   ``recommender.py:199-204`` — no VectorUDT, no Python UDF).
 
+Serving (``recommend_for_user``) reads a per-model serving index — the
+item factors joined to the catalog once, checkpointed on the executors
+and registered as a temp view — and runs one parameterized SQL statement
+per request. Scale shape: per-request cost is O(catalog × rank) dot
+products over the index, plus a broadcast of one user-factor row and of
+that user's rated items; the ratings are never shuffled. The index lives
+as long as the model. Its checkpoint is executor-local: a lost executor
+takes its partitions with it.
+
 Exact RMSE values are NOT bit-reproducible across mllib→ml ALS
-(different factor initialization); tests assert the ≈0.94 band on a
-MovieLens-profile fixture instead (SURVEY.md §6).
+(different factor initialization). The fixture tests only assert that
+the test RMSE beats the trivial predictor (< 1.2); the ≈0.94 band
+(0.90–1.00) is checked only by the reference-data test, which is skipped
+until the real MovieLens CSVs are present (SURVEY.md §6).
 """
 
 from __future__ import annotations
 
+import threading
+import uuid
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_movie_recommender_spark.driver_scalar import scalar_row
-from pyspark_movie_recommender_spark.operators.relational import (
-    anti_join,
-    global_top_k,
-    minmax_rescale,
-    rmse,
-    union_all,
-)
+from pyspark_movie_recommender_spark.operators.relational import rmse, union_all
 
 # reference hyperparameters (recommender.py:24-27)
 SEED = 5
@@ -109,6 +117,9 @@ def train_with_grid_search(
             best, result.best_rank, result.best_model = err, rank, model
 
     result.test_rmse = evaluate_rmse(result.best_model, test)
+    # the returned model's factors are already materialized
+    train.unpersist()
+    validation.unpersist()
     return result
 
 
@@ -117,6 +128,67 @@ def fold_in_user(
 ) -> object:
     """Model refresh by union-retrain (reference ML4, recommender.py:122-125)."""
     return _als(rank).fit(union_all(ratings, new_user_ratings))
+
+
+# weak keys: an entry goes when its key object is garbage-collected
+_USER_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()  # model -> view
+_ITEM_INDEXES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()  # model -> items -> view
+_RATINGS_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()  # ratings -> view
+_REGISTER = threading.Lock()  # one build per key under concurrent requests
+
+
+def _release(sc, jsession, name: str, jrdd) -> None:
+    if sc._jsc is None:  # the SparkContext has stopped: nothing is left to free
+        return
+    if jrdd is not None:
+        jrdd.unpersist(False)
+    # the session catalog's drop: ``spark.catalog.dropTempView`` would also
+    # uncache every cached plan equal to the view's, e.g. the caller's ratings
+    jsession.sessionState().catalog().dropTempView(name)
+
+
+def _temp_view(df: DataFrame, owners: tuple, checkpoint: bool = False) -> str:
+    """Register ``df`` as a uniquely named temp view, dropped once any of
+    ``owners`` is garbage-collected.
+
+    With ``checkpoint`` the view reads an executor-local checkpoint of
+    ``df``, unpersisted on the same release. A checkpoint rather than
+    ``cache()``: a plan over the model's factors inherits the RDD lineage
+    of every ALS iteration, and the scheduler walks it (20+ skipped
+    stages) on each job of each request.
+    """
+    jrdd = None
+    if checkpoint:
+        df = df.localCheckpoint()
+        jrdd = df._jdf.queryExecution().analyzed().rdd()
+    name = f"serving_{uuid.uuid4().hex}"
+    df.createTempView(name)
+    spark = df.sparkSession
+    release = weakref.finalize(
+        owners[0], _release, spark.sparkContext, spark._jsparkSession, name, jrdd
+    )
+    # at interpreter exit the JVM goes away with the process
+    release.atexit = False
+    for owner in owners[1:]:
+        weakref.finalize(owner, release).atexit = False
+    return name
+
+
+def _memo(registry: weakref.WeakKeyDictionary, key, make):
+    with _REGISTER:
+        value = registry.get(key)
+        if value is None:
+            value = registry[key] = make()
+        return value
+
+
+def _item_index(model, items: DataFrame) -> DataFrame:
+    """The catalog joined to the model's item factors (``__factors``);
+    items without factors are absent."""
+    factors = model.itemFactors.select(
+        F.col("id").alias("__id"), F.col("features").alias("__factors")
+    )
+    return items.join(factors, F.col("item_id") == F.col("__id")).drop("__id")
 
 
 def recommend_for_user(
@@ -130,22 +202,72 @@ def recommend_for_user(
     """Reference entry point 2 (recommender.py:107-178): score every item
     the user has NOT rated, top-k by prediction, optional [1,5] rescale.
 
-    Candidate generation is a left-anti join (not a closure-captured id
-    list); items is expected to carry (item_id, title).
-    """
-    candidates = anti_join(
-        items.select("item_id"),
-        user_ratings.filter(F.col("user_id") == user_id).select("item_id"),
-        "item_id",
-    ).select(F.lit(user_id).alias("user_id"), "item_id")
+    ``items`` carries (item_id, title); its other columns pass through.
+    The first request for a (model, items) pair builds the serving index:
+    the factors joined to the catalog once, checkpointed, and registered
+    as a temp view, as are the model's user factors and ``user_ratings``.
+    Every request is then one parameterized statement over them:
 
-    preds = score(model, candidates).join(items, "item_id")
+    - the prediction is ALS's own sequential float dot product, so it
+      equals ``model.transform`` bit for bit; items without factors are
+      absent from the index and an unknown user matches no factor row
+      (cold-start drop: zero rows);
+    - the user's rated items are excluded with ``NOT EXISTS``;
+    - one aggregate yields min, max and every scored row. Its buffer is
+      O(catalog) per request, on the executor, never a driver collect.
+      The rows are then sorted by (scaled rating desc, item_id), not by
+      prediction: the rescale subtracts in float, so predictions a few
+      ulps apart can scale equal, and then item_id decides.
+
+    Index and views are keyed by the ``model``, ``items`` and
+    ``user_ratings`` objects (pass the same ones across requests) and
+    released when one of them is garbage-collected; the returned
+    DataFrame holds all three until it is.
+    """
+    users = _memo(
+        _USER_VIEWS, model, lambda: _temp_view(model.userFactors, (model,), checkpoint=True)
+    )
+    index = _memo(
+        _memo(_ITEM_INDEXES, model, weakref.WeakKeyDictionary),
+        items,
+        lambda: _temp_view(_item_index(model, items), (model, items), checkpoint=True),
+    )
+    ratings = _memo(
+        _RATINGS_VIEWS, user_ratings, lambda: _temp_view(user_ratings, (user_ratings,))
+    )
+    fields = ["item_id", "prediction"] + [
+        "`" + c.replace("`", "``") + "`" for c in items.columns if c != "item_id"
+    ]
+    catalog = [f for f in fields if f != "prediction"]
     if rescale:
-        preds = minmax_rescale(preds, "prediction", out_col="scaled_rating")
-        order = [F.desc("scaled_rating"), F.asc("item_id")]
+        scaled = "CASE WHEN hi = lo THEN 1.0D ELSE 1.0D + 4.0D * (s.prediction - lo) / (hi - lo) END"
+        key, scaled_rating = f"-({scaled})", ["-neg_key AS scaled_rating"]
     else:
-        order = [F.desc("prediction"), F.asc("item_id")]
-    return global_top_k(preds, order, k)
+        key, scaled_rating = "-s.prediction", []
+    statement = f"""
+        WITH scored AS (
+          SELECT /*+ BROADCAST(u) */ {", ".join(f"i.{c}" for c in catalog)},
+                 aggregate(zip_with(u.features, i.__factors, (x, y) -> x * y),
+                           CAST(0 AS FLOAT), (a, x) -> a + x) AS prediction
+          FROM {index} i CROSS JOIN {users} u
+          WHERE u.id = :uid
+            AND NOT EXISTS (SELECT 1 FROM {ratings} r
+                            WHERE r.user_id = :uid AND r.item_id = i.item_id)
+        ), bounds AS (
+          SELECT min(prediction) AS lo, max(prediction) AS hi,
+                 collect_list(struct({", ".join(fields)})) AS rows
+          FROM scored
+        ), top AS (
+          SELECT inline(slice(sort_array(transform(rows, s -> struct(
+                   {key} AS neg_key, {", ".join(f"s.{c}" for c in fields)}))), 1, :k))
+          FROM bounds
+        )
+        SELECT {", ".join(fields[:1] + [":uid AS user_id"] + fields[1:] + scaled_rating)}
+        FROM top
+    """
+    out_df = items.sparkSession.sql(statement, args={"uid": user_id, "k": k})
+    out_df._serving_owners = (model, items, user_ratings)
+    return out_df
 
 
 def recommend_parts_for_customers(

@@ -11,13 +11,24 @@ floor instead.
 
 from __future__ import annotations
 
+import gc
 import math
+import os
 import random
+import subprocess
+import sys
+import textwrap
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_movie_recommender_spark import recommend as REC
+from pyspark_movie_recommender_spark.operators.relational import (
+    anti_join,
+    global_top_k,
+    minmax_rescale,
+)
 
 
 @pytest.fixture(scope="module")
@@ -90,11 +101,166 @@ def test_rescale_bounds_exact(spark, movielens_fixture):
     model = REC._als(rank=2).fit(ratings)
     all_pairs = items.select(F.lit(7).alias("user_id"), "item_id")
     scored = REC.score(model, all_pairs)
-    from pyspark_movie_recommender_spark.operators.relational import minmax_rescale
-
     out = minmax_rescale(scored, "prediction", out_col="scaled")
     lo, hi = out.agg(F.min("scaled"), F.max("scaled")).collect()[0]
     assert lo == 1.0 and hi == 5.0
+
+
+# ---------------------------------------------------------------------------
+# serving: one parameterized statement per request over a per-model index
+# ---------------------------------------------------------------------------
+
+
+def _composed_recommend(model, items, user_ratings, user_id, k=10, rescale=True):
+    """The composition ``recommend_for_user`` replaced, kept as its oracle:
+    score the unrated items, join the catalog, min-max rescale, top-k."""
+    rated = user_ratings.filter(F.col("user_id") == user_id).select("item_id")
+    candidates = anti_join(items.select("item_id"), rated, "item_id").select(
+        F.lit(user_id).alias("user_id"), "item_id"
+    )
+    preds = REC.score(model, candidates).join(items, "item_id")
+    if rescale:
+        preds = minmax_rescale(preds, "prediction", out_col="scaled_rating")
+        order = [F.desc("scaled_rating"), F.asc("item_id")]
+    else:
+        order = [F.desc("prediction"), F.asc("item_id")]
+    return global_top_k(preds, order, k)
+
+
+@pytest.fixture(scope="module")
+def served(spark, movielens_fixture):
+    """A fold-in model trained without movie 399, which so has no factors."""
+    ratings, items = movielens_fixture
+    new_user = spark.createDataFrame(
+        [(0, m, float(r)) for m, r in [(100, 4), (237, 1), (44, 4), (25, 5), (3, 3)]],
+        "user_id int, item_id int, rating double",
+    )
+    model = REC.fold_in_user(ratings.filter(F.col("item_id") != 399), new_user, rank=2)
+    return model, items, ratings.unionByName(new_user)
+
+
+@pytest.mark.parametrize(
+    "user_id,k,rescale",
+    [
+        (0, 10, True),  # the fold-in user
+        (1, 10, True),
+        (17, 10, True),
+        (64, 10, True),
+        (128, 10, True),
+        (249, 10, True),
+        (0, 10, False),
+        (64, 10, False),
+        (0, 1000, True),  # k beyond the candidates: every scored item
+        (1, 1000, False),
+        (10_000, 10, True),  # no factors: zero rows
+    ],
+)
+def test_serving_statement_equals_composition(served, user_id, k, rescale):
+    model, items, user_ratings = served
+    got = REC.recommend_for_user(model, items, user_ratings, user_id, k=k, rescale=rescale)
+    want = _composed_recommend(model, items, user_ratings, user_id, k=k, rescale=rescale)
+    assert got.dtypes == want.dtypes
+    rows = [tuple(r) for r in got.collect()]
+    assert rows == [tuple(r) for r in want.collect()]  # exact, floats included
+    if user_id == 10_000:
+        assert rows == []
+    else:
+        assert rows
+    assert 399 not in {r[0] for r in rows}  # never an item without factors
+
+
+def _persisted(sc) -> set[int]:
+    return set(sc._jsc.getPersistentRDDs().keys())
+
+
+def _temp_views(spark) -> set[str]:
+    return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary}
+
+
+def test_serving_request_jobs_and_index_reuse(spark, served):
+    """A warm request is a handful of Spark jobs (the composition took 11)
+    and builds nothing: the index is per model, not per request."""
+    model, items, user_ratings = served
+    sc = spark.sparkContext
+    REC.recommend_for_user(model, items, user_ratings, 5).collect()
+    persisted = _persisted(sc)
+    views = _temp_views(spark)
+    sc.setJobGroup("serving-guard", "one warm recommend_for_user")
+    try:
+        assert len(REC.recommend_for_user(model, items, user_ratings, 6).collect()) == 10
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("serving-guard")) <= 6
+    assert _persisted(sc) == persisted
+    assert _temp_views(spark) == views
+
+
+def test_serving_index_released_with_model(spark, movielens_fixture):
+    ratings, items = movielens_fixture
+    sc = spark.sparkContext
+    cached = ratings.select("*").cache()
+    # a second wrapper of the same plan, so its view can be released
+    # while the caller still holds the cached one
+    user_ratings = DataFrame(cached._jdf, spark)
+    model = REC._als(rank=2, max_iter=2).fit(cached)
+    before = _persisted(sc)
+    assert len(REC.recommend_for_user(model, items, user_ratings, 1, k=3).collect()) == 3
+    built = _persisted(sc) - before
+    assert built  # the checkpointed item index and user factors
+    views = (
+        REC._ITEM_INDEXES[model][items],
+        REC._USER_VIEWS[model],
+        REC._RATINGS_VIEWS[user_ratings],
+    )
+    assert all(spark.catalog.tableExists(v) for v in views)
+    del model, user_ratings
+    gc.collect()
+    assert not _persisted(sc) & built
+    assert not any(spark.catalog.tableExists(v) for v in views)
+    # dropping the ratings view did not uncache the caller's DataFrame
+    assert cached.storageLevel.useMemory
+    cached.unpersist()
+
+
+_RELEASE_AFTER_STOP = textwrap.dedent(
+    """
+    import gc
+    from pyspark_movie_recommender_spark import get_spark, recommend as REC
+
+    spark = get_spark("serving-release-after-stop")
+    ratings = spark.createDataFrame(
+        [(u, i, float((u + 2 * i) % 5 + 1)) for u in range(1, 9) for i in range(6) if (u + i) % 3],
+        "user_id int, item_id int, rating double",
+    )
+    items = spark.createDataFrame([(i, f"m{i}") for i in range(6)], "item_id int, title string")
+    model = REC._als(rank=2, max_iter=2).fit(ratings)
+    kept = REC._als(rank=2, max_iter=2).fit(ratings)
+    for m in (model, kept):
+        assert len(REC.recommend_for_user(m, items, ratings, 1, k=2).collect()) == 2
+    spark.stop()
+    del model
+    gc.collect()
+    print("RELEASED")
+    # ``kept`` and its index are still alive at interpreter exit
+    """
+)
+
+
+def test_serving_release_is_a_no_op_after_spark_stop():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELEASE_AFTER_STOP],
+        capture_output=True,
+        text=True,
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "RELEASED" in proc.stdout
+    for marker in ("Exception ignored", "Traceback", "ConnectionRefused"):
+        assert marker not in proc.stderr, proc.stderr[-2000:]
 
 
 # ---------------------------------------------------------------------------
@@ -158,17 +324,13 @@ def test_reference_movielens_full_protocol_parity(spark):
     # is deterministic, not model-dependent: 9,125 movies − the 10
     # rated − 58 movies never rated by anyone (no item factors). Our
     # coldStartStrategy='drop' must land on the same number.
-    cands = REC.anti_join(
+    cands = anti_join(
         movies.select("item_id"), new_user.select("item_id"), "item_id"
     ).select(F.lit(0).alias("user_id"), "item_id")
     scored = REC.score(model, cands)
     assert scored.count() == 9057  # recommender.py:156
     # min-max rescale bounds are EXACT on the full scored set: the min
     # prediction maps to 1.0 and the max to 5.0 (recommender.py:206,243)
-    from pyspark_movie_recommender_spark.operators.relational import (
-        minmax_rescale,
-    )
-
     bounds = (
         minmax_rescale(scored, "prediction", out_col="scaled_rating")
         .agg(
